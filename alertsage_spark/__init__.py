@@ -14,9 +14,13 @@ notebook tool; this engine is DataFrame/SQL/Arrow-UDF-first and designed
 for multi-executor clusters over ~100 TB corpora.
 """
 
+from alertsage_spark import _zipcache
+
+_zipcache.install()  # first: every worker that unpickles an engine UDF runs this
+
 __version__ = "0.2.0"
 
-from alertsage_spark.session import get_spark  # noqa: F401
+from alertsage_spark.session import get_spark  # noqa: E402, F401
 
 # Public API façade — the stable surface for a user switching from the
 # reference (lazy imports keep `import alertsage_spark` light).

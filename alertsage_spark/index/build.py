@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from collections import deque
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from alertsage_spark.session import persist_bounded
@@ -214,11 +214,6 @@ def build_index(
         mode=mode,
         corpus_stats=_corpus_stats_df(postings, n_docs),
     )
-
-
-def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The driver fixture corpus: documents(doc_id, text, lang, source, n_chars)."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def build_fielded_index(

@@ -950,6 +950,7 @@ class SegmentIndex:
     # by postings count, invalidated with the whole snapshot by
     # assert_serving_fresh (mutations force a re-load -> fresh cache).
     term_rows_cache: dict | None = None
+    term_rows_postings: int = 0  # running n_postings total of term_rows_cache
     tomb_rows_cache: list | None = None  # tombstone rows, collected once
 
     def _group_dirs(self) -> tuple:
@@ -1010,6 +1011,7 @@ class SegmentIndex:
         else:
             self.assert_serving_fresh()
         self.term_rows_cache = {}
+        self.term_rows_postings = 0
         self.segments.cache().count()
         if self.termstats.count() <= collect_termstats_max:
             self.df_map = {

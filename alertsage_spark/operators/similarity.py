@@ -135,10 +135,6 @@ def _pack_signatures(signs: np.ndarray, n_tables: int, bits: int) -> np.ndarray:
     return out
 
 
-def sig_cols(n_tables: int) -> list[str]:
-    return [f"sig_{t}" for t in range(n_tables)]
-
-
 def with_lsh_signatures(
     embeddings: DataFrame,
     n_tables: int = 8,

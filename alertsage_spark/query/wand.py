@@ -12,10 +12,18 @@ Query plan (batch of queries, one Spark job):
                                                 shard's local postings,
                                                 doc lengths decoded from
                                                 the shard's own doclen row
-      -> global window rank (round(score,6) desc, doc_id asc) <= k
+      -> driver merge of the per-shard top-k candidates
+                                             <- collect + sort by
+                                                (round(score,6) desc,
+                                                doc_id asc), cut at k
 
 Document-sharding makes this embarrassingly parallel: no shuffle of
-postings at query time, one small shuffle of per-shard top-k candidates.
+postings at query time. The merge bound is n_shards * k * |Q| candidate
+rows; above ``DRIVER_MERGE_MAX_ROWS`` the candidates stay distributed and
+a window rank (same tie-break) over one small shuffle replaces the driver
+merge. A prepared index whose query terms match at most
+``FAST_PATH_MAX_POSTINGS`` postings scores on the driver instead, from an
+LRU of collected term rows (``_local_topk``).
 
 Two scorers, both exact (rank-identical to the join+agg path and the
 Python oracle — property-tested):
@@ -453,6 +461,10 @@ DRIVER_MERGE_MAX_ROWS = 200_000
 TERM_CACHE_MAX_POSTINGS = 8_000_000
 
 
+def _n_postings(rows: list) -> int:
+    return sum(int(r["n_postings"]) for r in rows)
+
+
 def _cached_term_rows(
     index: SegmentIndex, all_terms: list[str]
 ) -> tuple[dict[str, list], list]:
@@ -467,6 +479,7 @@ def _cached_term_rows(
     cache = index.term_rows_cache
     if cache is None:
         cache = index.term_rows_cache = {}
+        index.term_rows_postings = 0
     missing = [t for t in all_terms if t not in cache]
     need_tomb = index.tomb_rows_cache is None
     if missing or need_tomb:
@@ -484,17 +497,16 @@ def _cached_term_rows(
             index.tomb_rows_cache = tombs
         for t in missing:
             cache[t] = fetched[t]
+            index.term_rows_postings += _n_postings(fetched[t])
         # LRU eviction by total postings (dict preserves insertion order;
         # hits below reinsert to mark recency)
-        total = sum(
-            int(r["n_postings"]) for rows_t in cache.values() for r in rows_t
-        )
-        while total > TERM_CACHE_MAX_POSTINGS and len(cache) > len(all_terms):
+        while (index.term_rows_postings > TERM_CACHE_MAX_POSTINGS
+               and len(cache) > len(all_terms)):
             victim = next(iter(cache))
             if victim in all_terms:  # keep this query's working set
                 cache[victim] = cache.pop(victim)
                 continue
-            total -= sum(int(r["n_postings"]) for r in cache.pop(victim))
+            index.term_rows_postings -= _n_postings(cache.pop(victim))
     out: dict[str, list] = {}
     for t in all_terms:
         rows_t = cache.pop(t)  # reinsert = LRU touch

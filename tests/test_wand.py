@@ -157,3 +157,32 @@ def test_term_cache_lru_evicts_by_postings_budget(spark, seg_index):
         assert set(prepared.term_rows_cache) <= keep
     finally:
         W.TERM_CACHE_MAX_POSTINGS = old_cap
+
+
+def test_term_cache_running_total_tracks_cached_postings(spark, seg_index, monkeypatch):
+    """The LRU keeps its postings total incrementally: after every miss
+    and eviction it equals a sum recomputed over the cached rows, and
+    prepare_for_queries resets it with the cache."""
+    import alertsage_spark.query.wand as W
+
+    def recomputed(index):
+        return sum(int(r["n_postings"]) for rows in index.term_rows_cache.values()
+                   for r in rows)
+
+    prepared = load_index(spark, str(seg_index.paths.root)).prepare_for_queries()
+    texts = [text for _qid, text in QUERIES]
+    for text in texts:
+        wand_topk(spark, prepared, [("Q", text)], k=K)
+    full = recomputed(prepared)
+    assert prepared.term_rows_postings == full > 0
+
+    prepared.prepare_for_queries()
+    assert prepared.term_rows_cache == {} and prepared.term_rows_postings == 0
+    monkeypatch.setattr(W, "TERM_CACHE_MAX_POSTINGS", full // 3)
+    evicted = 0
+    for text in texts + texts[::-1]:
+        before = set(prepared.term_rows_cache)
+        wand_topk(spark, prepared, [("Q", text)], k=K)
+        evicted += len(before - set(prepared.term_rows_cache))
+        assert prepared.term_rows_postings == recomputed(prepared), text
+    assert evicted > 0
